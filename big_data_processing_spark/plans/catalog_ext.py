@@ -10,6 +10,8 @@ SQL is a true semantic twin, not a hand-kept copy.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -409,6 +411,9 @@ _ARTIFACT_DIR: str | None = None
 _ARTIFACTS: dict[tuple[str, str], str] = {}
 _ARTIFACT_SEQ = 0  # monotonic: len(_ARTIFACTS) does not grow on rebuilds
 _BUILDS_IN_FLIGHT = 0  # gates the inline barrier release (see below)
+# guards the three above and the sole-builder barrier release: the
+# prebuild pool runs builds on concurrent driver threads
+_ARTIFACT_LOCK = threading.Lock()
 
 
 def _memo_artifact(
@@ -430,24 +435,24 @@ def _memo_artifact(
 
     from ..operators.util import timed_phase
 
-    global _ARTIFACT_DIR, _ARTIFACT_SEQ
+    global _ARTIFACT_DIR, _ARTIFACT_SEQ, _BUILDS_IN_FLIGHT
     key = (os.path.abspath(sf_dir), name)
     path = _ARTIFACTS.get(key)
     if path is None or not os.path.isdir(path):
-        if _ARTIFACT_DIR is None:
-            _ARTIFACT_DIR = tempfile.mkdtemp(prefix="spark_artifact_memo_")
-            atexit.register(shutil.rmtree, _ARTIFACT_DIR, ignore_errors=True)
-        # a monotonic sequence (not len(_ARTIFACTS)) keeps rebuild paths
-        # unique: two same-named keys that both lose their dirs must not
-        # overwrite one another's rebuilds (ADVICE r7)
-        _ARTIFACT_SEQ += 1
-        path = os.path.join(_ARTIFACT_DIR, f"{name}_{_ARTIFACT_SEQ}")
+        with _ARTIFACT_LOCK:
+            if _ARTIFACT_DIR is None:
+                _ARTIFACT_DIR = tempfile.mkdtemp(prefix="spark_artifact_memo_")
+                atexit.register(shutil.rmtree, _ARTIFACT_DIR, ignore_errors=True)
+            # a monotonic sequence (not len(_ARTIFACTS)) keeps rebuild
+            # paths unique: two same-named keys that both lose their
+            # dirs must not overwrite one another's rebuilds (ADVICE r7)
+            _ARTIFACT_SEQ += 1
+            path = os.path.join(_ARTIFACT_DIR, f"{name}_{_ARTIFACT_SEQ}")
+            _BUILDS_IN_FLIGHT += 1
         # recorded as one-time "setup" so bench.py can report the build
         # separately from the steady-state serving time it amortizes
         from ..operators.util import _BARRIERS
 
-        global _BUILDS_IN_FLIGHT
-        _BUILDS_IN_FLIGHT += 1
         try:
             with timed_phase(f"artifact:{name}"):
                 n_barriers_before = len(_BARRIERS)
@@ -470,15 +475,19 @@ def _memo_artifact(
                 # there, and a concurrent build's live barrier must not
                 # be popped mid-build — the LAST build to finish (or the
                 # bench's between-entry release_barriers) frees the
-                # stragglers, which by then are all dead.
-                if _BUILDS_IN_FLIGHT == 1:
-                    while len(_BARRIERS) > n_barriers_before:
-                        try:
-                            _BARRIERS.pop()()
-                        except Exception:
-                            pass
+                # stragglers, which by then are all dead.  Holding the
+                # lock keeps another build from starting (and registering
+                # barriers) between the sole-builder test and the pops.
+                with _ARTIFACT_LOCK:
+                    if _BUILDS_IN_FLIGHT == 1:
+                        while len(_BARRIERS) > n_barriers_before:
+                            try:
+                                _BARRIERS.pop()()
+                            except Exception:
+                                pass
         finally:
-            _BUILDS_IN_FLIGHT -= 1
+            with _ARTIFACT_LOCK:
+                _BUILDS_IN_FLIGHT -= 1
         _ARTIFACTS[key] = path
     return spark.read.parquet(path)
 

@@ -8,6 +8,17 @@ the 8 analytical outputs, and the derived serving aggregate — each a
 parquet table under ``out_dir``, all sharing one scan lineage (Spark
 caches the joined fact across outputs instead of re-reading per job).
 
+The fact write goes first: it fills the fact's cache. Every other sink
+(the locations table, the 7 analytical outputs, the ML branch) then
+runs concurrently from one driver thread pool, reading that cache — the
+sinks are independent, and only run one after another if the driver
+submits them that way; overlapping them back-fills cores that one
+sink's small stages leave idle. Each sink's jobs carry the caller's
+job group and properties, so ``cancelJobGroup`` reaches them. Every
+sink finishes before the call returns; the first failure, in
+submission order, is re-raised, and the fact's cache is released
+either way.
+
 Entry point: ``python scripts/run_pipeline.py <weather_csv>
 <location_csv> <out_dir>`` (the spark-submit batch entry, reference
 kafka_hdfs_consumer.py:177-181); or call :func:`run_full_pipeline`.
@@ -15,7 +26,10 @@ kafka_hdfs_consumer.py:177-181); or call :func:`run_full_pipeline`.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 from ..sources.writers import write_table
 from . import weather as W
@@ -34,42 +48,61 @@ def run_full_pipeline(
     year; analytics reuse one cached in-memory lineage (the reference
     re-reads HDFS from scratch in every framework)."""
     out = out_dir.rstrip("/")
-    paths: dict[str, str] = {}
-
     weather = W.ingest_weather_csv(spark, weather_csv).cache()
     location = W.ingest_location_csv(spark, location_csv)
-
-    fact_path = f"{out}/weather_fact"
-    W.write_fact_partitioned(weather, fact_path)
-    paths["weather_fact"] = fact_path
-    write_table(location, f"{out}/locations")
-    paths["locations"] = f"{out}/locations"
-
-    outputs = {
-        "district_monthly_weather": W.district_monthly_weather(weather, location),
-        "highest_precipitation": W.highest_precipitation(weather),
-        "top_temperate_cities": W.top_temperate_cities(weather, location),
-        "evapotranspiration_by_season": W.evapotranspiration_by_season(weather, location),
-        "radiation_analysis": W.radiation_analysis(weather),
-        "weekly_max_temp_hottest_months": W.weekly_max_temp_hottest_months(
+    # each sink builds its plan on its own pool thread, so the plans'
+    # construction (py4j round trips, analysis) overlaps as well
+    plans = {
+        "locations": lambda: location,
+        "district_monthly_weather": lambda: W.district_monthly_weather(weather, location),
+        "highest_precipitation": lambda: W.highest_precipitation(weather),
+        "top_temperate_cities": lambda: W.top_temperate_cities(weather, location),
+        "evapotranspiration_by_season": lambda: W.evapotranspiration_by_season(
             weather, location
         ),
-        "ml_feature_statistics": W.ml_feature_statistics(weather),
+        "radiation_analysis": lambda: W.radiation_analysis(weather),
+        "weekly_max_temp_hottest_months": lambda: W.weekly_max_temp_hottest_months(
+            weather, location
+        ),
+        "ml_feature_statistics": lambda: W.ml_feature_statistics(weather),
     }
-    for name, df in outputs.items():
-        path = f"{out}/{name}"
-        write_table(df, path)
-        paths[name] = path
-
+    names = ["weather_fact", *plans]
     if with_ml:
-        from ..ml import pipeline as ML
+        names += ["ml_model_performance", "et_model"]
+    paths = {name: f"{out}/{name}" for name in names}
 
-        model, train, test = ML.train_et_model(weather)
-        perf = ML.model_performance_row(spark, model, train, test)
-        write_table(perf, f"{out}/ml_model_performance")
-        paths["ml_model_performance"] = f"{out}/ml_model_performance"
-        ML.save_model(model, f"{out}/et_model")
-        paths["et_model"] = f"{out}/et_model"
+    try:
+        W.write_fact_partitioned(weather, paths["weather_fact"])
+        # one worker per sink after the fact: the ML branch's nested
+        # save_model task always finds a free worker
+        with ThreadPoolExecutor(max_workers=len(names) - 1) as pool:
 
-    weather.unpersist()
+            def submit(fn, *args):
+                return pool.submit(inheritable_thread_target(spark)(fn), *args)
+
+            futures = [submit(_write, plan, paths[name]) for name, plan in plans.items()]
+            if with_ml:
+                futures.append(submit(_ml_sinks, submit, spark, weather, paths))
+            for f in futures:
+                f.result()
+    finally:
+        weather.unpersist()
     return paths
+
+
+def _write(plan, path: str) -> None:
+    write_table(plan(), path)
+
+
+def _ml_sinks(submit, spark: SparkSession, weather, paths: dict[str, str]) -> None:
+    """Fit the ET model, then save it beside computing and writing its
+    performance row."""
+    from ..ml import pipeline as ML
+
+    model, train, test = ML.train_et_model(weather)
+    saved = submit(ML.save_model, model, paths["et_model"])
+    try:
+        perf = ML.model_performance_row(spark, model, train, test)
+        write_table(perf, paths["ml_model_performance"])
+    finally:
+        saved.result()

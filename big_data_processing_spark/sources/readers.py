@@ -91,7 +91,12 @@ def parquet_row_count(sf_dir: str, name: str) -> int:
     bloom entry's per-run ``keys.count()`` job existed only to size
     m).  On a manifest-backed table format (Iceberg/Delta) the same
     number is one manifest lookup; on a raw parquet directory it is
-    the listing the scan planner performs anyway."""
+    the listing the scan planner performs anyway.
+
+    A part directory whose files carry no ``.parquet`` suffix counts
+    every data file instead, skipping names that start with ``_`` or
+    ``.`` (``_SUCCESS``, ``.crc`` sidecars, ``_delta_log``) as Spark's
+    file index does."""
     import glob as _glob
 
     import pyarrow.parquet as _pq
@@ -103,10 +108,21 @@ def parquet_row_count(sf_dir: str, name: str) -> int:
         else sorted(
             _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
         )
+        or _data_files(path)
     )
     if not files:
         raise FileNotFoundError(f"no parquet files under {path}")
     return sum(_pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
+def _data_files(root: str) -> list[str]:
+    """Every file under ``root`` outside hidden (``_``/``.``) names."""
+    hidden = ("_", ".")
+    out = []
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if not x.startswith(hidden)]
+        out += [os.path.join(d, f) for f in files if not f.startswith(hidden)]
+    return sorted(out)
 
 
 def _clear_table_memo() -> None:

@@ -1,24 +1,63 @@
 """Capstone: one call produces the reference's entire warehouse, with
 the reference's output-shape invariants (table inventory and
-cardinalities scaled to the fixture)."""
+cardinalities scaled to the fixture). The sinks after the fact write
+run concurrently, so the pipeline is also held to: each sink writes its
+own plan's rows, every sink job carries the caller's job group, and a
+failing sink is re-raised with the fact's cache released."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from big_data_processing_spark.plans import pipeline as P
+from big_data_processing_spark.plans import weather as W
 from big_data_processing_spark.plans.pipeline import run_full_pipeline
 
 from .weather_fixture import generate
 
+GROUP = "full-pipeline-under-test"
 
-def test_full_pipeline_builds_warehouse(spark, tmp_path):
-    info = generate(str(tmp_path / "src"), years=(2012, 2013))
-    paths = run_full_pipeline(
-        spark,
-        info["weather_csv"],
-        info["location_csv"],
-        str(tmp_path / "warehouse"),
-    )
+
+@pytest.fixture(scope="module")
+def warehouse(spark, tmp_path_factory):
+    """One pipeline run under a caller-set job group. Returns the
+    fixture info, the written paths, the job group each ``write_table``
+    sink saw on its thread, and the ids of the jobs the run left outside
+    any group."""
+    sc = spark.sparkContext
+    tmp = tmp_path_factory.mktemp("pipeline")
+    info = generate(str(tmp / "src"), years=(2012, 2013))
+    seen = {}
+    real = P.write_table
+
+    def recording(df, path, *args, **kwargs):
+        seen[path.rsplit("/", 1)[-1]] = sc.getLocalProperty("spark.jobGroup.id")
+        return real(df, path, *args, **kwargs)
+
+    def ungrouped():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    ungrouped_before = ungrouped()
+    sc.setJobGroup(GROUP, "run_full_pipeline under a caller's job group")
+    try:
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(P, "write_table", recording)
+            paths = run_full_pipeline(
+                spark,
+                info["weather_csv"],
+                info["location_csv"],
+                str(tmp / "warehouse"),
+            )
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return info, paths, seen, ungrouped() - ungrouped_before
+
+
+def test_full_pipeline_builds_warehouse(spark, warehouse):
+    info, paths, _, _ = warehouse
     # table inventory mirrors the reference warehouse
     # (DATA_ANALYSIS_TABLES_MAPPING.md:531-544)
     assert set(paths) == {
@@ -177,3 +216,56 @@ def test_curation_pipeline_materializes_consistent_corpus(spark, sf_dir, tmp_pat
     assert train.count() > 0
     # quality gate actually held
     assert curated.agg(F.min("quality_score")).first()[0] >= 0.45
+
+
+def test_each_sink_writes_its_own_plan(spark, warehouse):
+    """Every output equals its plan collected directly, in both
+    directions — a sink that wrote another sink's frame (a late-bound
+    loop variable in a task closure) fails here."""
+    info, paths, _, _ = warehouse
+    weather = W.ingest_weather_csv(spark, info["weather_csv"])
+    location = W.ingest_location_csv(spark, info["location_csv"])
+    plans = {
+        "locations": location,
+        "district_monthly_weather": W.district_monthly_weather(weather, location),
+        "highest_precipitation": W.highest_precipitation(weather),
+        "top_temperate_cities": W.top_temperate_cities(weather, location),
+        "evapotranspiration_by_season": W.evapotranspiration_by_season(weather, location),
+        "radiation_analysis": W.radiation_analysis(weather),
+        "weekly_max_temp_hottest_months": W.weekly_max_temp_hottest_months(weather, location),
+        "ml_feature_statistics": W.ml_feature_statistics(weather),
+    }
+    for name, want in plans.items():
+        got = spark.read.parquet(paths[name])
+        assert got.exceptAll(want).isEmpty(), f"{name}: rows not in its plan"
+        assert want.exceptAll(got).isEmpty(), f"{name}: plan rows missing"
+
+
+def test_sink_jobs_carry_the_callers_job_group(spark, warehouse):
+    """Pool threads inherit the caller's job group, so every pipeline
+    job is listed under it (and ``cancelJobGroup`` reaches it)."""
+    _, paths, seen, escaped = warehouse
+    sc = spark.sparkContext
+    sinks = {name for name in paths if name not in ("weather_fact", "et_model")}
+    assert seen == {name: GROUP for name in sinks}
+    grouped = sc.statusTracker().getJobIdsForGroup(GROUP)
+    assert len(grouped) >= len(sinks) + 1  # the fact write, then every sink
+    assert not escaped, f"pipeline jobs outside the caller's group: {sorted(escaped)}"
+
+
+def test_failed_sink_is_reraised_and_releases_the_cache(spark, tmp_path, monkeypatch):
+    info = generate(str(tmp_path / "src"), years=(2012, 2012))
+    real = P.write_table
+
+    def failing(df, path, *args, **kwargs):
+        if path.endswith("/radiation_analysis"):
+            raise RuntimeError("radiation_analysis sink failed")
+        return real(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(P, "write_table", failing)
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="radiation_analysis sink failed"):
+        run_full_pipeline(
+            spark, info["weather_csv"], info["location_csv"], str(tmp_path / "warehouse")
+        )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

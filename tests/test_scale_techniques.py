@@ -555,3 +555,30 @@ def test_parquet_row_count_matches_scan(spark):
     assert parquet_row_count(sf, "orders") == load_table(
         spark, sf, "orders"
     ).count()
+
+
+def test_parquet_row_count_reads_suffixless_part_files(tmp_path):
+    """A part directory whose files lack the ``.parquet`` suffix still
+    sizes from footers; hidden sidecar names are skipped, and a
+    directory with no data file raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from big_data_processing_spark.sources.readers import parquet_row_count
+
+    table = tmp_path / "orders.parquet"
+    (table / "year=2020").mkdir(parents=True)
+    pq.write_table(pa.table({"k": list(range(7))}), table / "part-00000")
+    pq.write_table(pa.table({"k": list(range(5))}), table / "year=2020" / "part-00001")
+    (table / "_SUCCESS").write_bytes(b"")
+    (table / ".part-00000.crc").write_bytes(b"not parquet")
+    (table / "_delta_log").mkdir()
+    (table / "_delta_log" / "00000.json").write_text("{}")
+    assert parquet_row_count(str(tmp_path), "orders") == 12
+
+    empty = tmp_path / "events.parquet"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_bytes(b"")
+    with pytest.raises(FileNotFoundError):
+        parquet_row_count(str(tmp_path), "events")
