@@ -50,39 +50,33 @@ def run_full_pipeline(
     out = out_dir.rstrip("/")
     weather = W.ingest_weather_csv(spark, weather_csv).cache()
     location = W.ingest_location_csv(spark, location_csv)
-    # each sink builds its plan on its own pool thread, so the plans'
-    # construction (py4j round trips, analysis) overlaps as well
-    plans = {
-        "locations": lambda: location,
-        "district_monthly_weather": lambda: W.district_monthly_weather(weather, location),
-        "highest_precipitation": lambda: W.highest_precipitation(weather),
-        "top_temperate_cities": lambda: W.top_temperate_cities(weather, location),
-        "evapotranspiration_by_season": lambda: W.evapotranspiration_by_season(
+    outputs = {
+        "locations": location,
+        "district_monthly_weather": W.district_monthly_weather(weather, location),
+        "highest_precipitation": W.highest_precipitation(weather),
+        "top_temperate_cities": W.top_temperate_cities(weather, location),
+        "evapotranspiration_by_season": W.evapotranspiration_by_season(weather, location),
+        "radiation_analysis": W.radiation_analysis(weather),
+        "weekly_max_temp_hottest_months": W.weekly_max_temp_hottest_months(
             weather, location
         ),
-        "radiation_analysis": lambda: W.radiation_analysis(weather),
-        "weekly_max_temp_hottest_months": lambda: W.weekly_max_temp_hottest_months(
-            weather, location
-        ),
-        "ml_feature_statistics": lambda: W.ml_feature_statistics(weather),
+        "ml_feature_statistics": W.ml_feature_statistics(weather),
     }
-    names = ["weather_fact", *plans]
+    names = ["weather_fact", *outputs]
     if with_ml:
         names += ["ml_model_performance", "et_model"]
     paths = {name: f"{out}/{name}" for name in names}
 
+    sinks = [(write_table, df, paths[name]) for name, df in outputs.items()]
+    if with_ml:
+        sinks.append((_ml_sinks, spark, weather, paths))
     try:
         W.write_fact_partitioned(weather, paths["weather_fact"])
-        # one worker per sink after the fact: the ML branch's nested
-        # save_model task always finds a free worker
-        with ThreadPoolExecutor(max_workers=len(names) - 1) as pool:
-
-            def submit(fn, *args):
-                return pool.submit(inheritable_thread_target(spark)(fn), *args)
-
-            futures = [submit(_write, plan, paths[name]) for name, plan in plans.items()]
-            if with_ml:
-                futures.append(submit(_ml_sinks, submit, spark, weather, paths))
+        with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(fn), *args)
+                for fn, *args in sinks
+            ]
             for f in futures:
                 f.result()
     finally:
@@ -90,19 +84,11 @@ def run_full_pipeline(
     return paths
 
 
-def _write(plan, path: str) -> None:
-    write_table(plan(), path)
-
-
-def _ml_sinks(submit, spark: SparkSession, weather, paths: dict[str, str]) -> None:
-    """Fit the ET model, then save it beside computing and writing its
-    performance row."""
+def _ml_sinks(spark: SparkSession, weather, paths: dict[str, str]) -> None:
+    """Fit the ET model, write its performance row, then save it."""
     from ..ml import pipeline as ML
 
     model, train, test = ML.train_et_model(weather)
-    saved = submit(ML.save_model, model, paths["et_model"])
-    try:
-        perf = ML.model_performance_row(spark, model, train, test)
-        write_table(perf, paths["ml_model_performance"])
-    finally:
-        saved.result()
+    perf = ML.model_performance_row(spark, model, train, test)
+    write_table(perf, paths["ml_model_performance"])
+    ML.save_model(model, paths["et_model"])

@@ -93,23 +93,14 @@ def parquet_row_count(sf_dir: str, name: str) -> int:
     number is one manifest lookup; on a raw parquet directory it is
     the listing the scan planner performs anyway.
 
-    A part directory whose files carry no ``.parquet`` suffix counts
-    every data file instead, skipping names that start with ``_`` or
-    ``.`` (``_SUCCESS``, ``.crc`` sidecars, ``_delta_log``) as Spark's
-    file index does."""
-    import glob as _glob
-
+    A table directory counts the files Spark's file index would scan:
+    every file, with or without a ``.parquet`` suffix, outside names
+    that start with ``_`` or ``.`` (``_SUCCESS``, ``.crc`` sidecars,
+    ``_delta_log``)."""
     import pyarrow.parquet as _pq
 
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    files = (
-        [path]
-        if os.path.isfile(path)
-        else sorted(
-            _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        )
-        or _data_files(path)
-    )
+    files = [path] if os.path.isfile(path) else _data_files(path)
     if not files:
         raise FileNotFoundError(f"no parquet files under {path}")
     return sum(_pq.ParquetFile(f).metadata.num_rows for f in files)

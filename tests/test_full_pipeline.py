@@ -254,18 +254,27 @@ def test_sink_jobs_carry_the_callers_job_group(spark, warehouse):
 
 
 def test_failed_sink_is_reraised_and_releases_the_cache(spark, tmp_path, monkeypatch):
+    """The failing sink's error reaches the caller, and the pipeline's
+    cached fact is released. Only that fact's cache entry is checked —
+    caches other tests hold in the shared session are left alone."""
     info = generate(str(tmp_path / "src"), years=(2012, 2012))
     real = P.write_table
+    during = []
+
+    def fact_cached() -> bool:
+        level = W.ingest_weather_csv(spark, info["weather_csv"]).storageLevel
+        return level.useMemory or level.useDisk
 
     def failing(df, path, *args, **kwargs):
         if path.endswith("/radiation_analysis"):
+            during.append(fact_cached())
             raise RuntimeError("radiation_analysis sink failed")
         return real(df, path, *args, **kwargs)
 
     monkeypatch.setattr(P, "write_table", failing)
-    spark.catalog.clearCache()
     with pytest.raises(RuntimeError, match="radiation_analysis sink failed"):
         run_full_pipeline(
             spark, info["weather_csv"], info["location_csv"], str(tmp_path / "warehouse")
         )
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert during == [True]  # the probe finds the pipeline's fact while it runs
+    assert not fact_cached()

@@ -558,9 +558,10 @@ def test_parquet_row_count_matches_scan(spark):
 
 
 def test_parquet_row_count_reads_suffixless_part_files(tmp_path):
-    """A part directory whose files lack the ``.parquet`` suffix still
-    sizes from footers; hidden sidecar names are skipped, and a
-    directory with no data file raises."""
+    """A part directory sizes from the footers of the files Spark would
+    scan: data files with or without the ``.parquet`` suffix, but no
+    hidden (``_``/``.``) name, not even a parquet file under
+    ``_delta_log``. A directory with no data file raises."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pytest
@@ -571,11 +572,15 @@ def test_parquet_row_count_reads_suffixless_part_files(tmp_path):
     (table / "year=2020").mkdir(parents=True)
     pq.write_table(pa.table({"k": list(range(7))}), table / "part-00000")
     pq.write_table(pa.table({"k": list(range(5))}), table / "year=2020" / "part-00001")
+    pq.write_table(pa.table({"k": list(range(2))}), table / "part-00002.parquet")
     (table / "_SUCCESS").write_bytes(b"")
     (table / ".part-00000.crc").write_bytes(b"not parquet")
     (table / "_delta_log").mkdir()
     (table / "_delta_log" / "00000.json").write_text("{}")
-    assert parquet_row_count(str(tmp_path), "orders") == 12
+    pq.write_table(
+        pa.table({"k": list(range(3))}), table / "_delta_log" / "00010.checkpoint.parquet"
+    )
+    assert parquet_row_count(str(tmp_path), "orders") == 14
 
     empty = tmp_path / "events.parquet"
     empty.mkdir()
